@@ -1185,7 +1185,7 @@ def connected_components(
 ) -> DataFrame:
     """Distributed connected components by min-label propagation — the
     Pregel/GraphX CC algorithm expressed as DataFrame joins.  Returns
-    ``(node, component)`` where ``component`` is the smallest node id
+    ``(node, comp)`` where ``comp`` is the smallest node id
     in the node's component (the canonical representative for "keep
     one doc per near-dup cluster").
 

@@ -7,8 +7,9 @@ Usage:
   python scripts/dump_plans.py <tag> [entry ...]
 
 ``tag`` is typically ``before`` or ``after``.  With no entries named,
-dumps every bench headline entry.  Round is inferred the same way as
-bench.py (CORRECTNESS_rN present without BENCH_rN => round N).
+dumps every bench entry (``bench.ENTRIES``); any catalog entry name is
+accepted too.  The session is bench.py's (``bench.build_session``).
+Round N is the latest CORRECTNESS_rN, plus one once BENCH_rN exists.
 
 NOTE: explain() prints the INITIAL AQE plan (isFinalPlan=false) — join
 strategies AQE rewrites at runtime won't show; Exchange counts,
@@ -26,12 +27,10 @@ import re
 import sys
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if HERE not in sys.path:
-    sys.path.insert(0, HERE)
-if HERE not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
-    os.environ["PYTHONPATH"] = (
-        HERE + os.pathsep + os.environ.get("PYTHONPATH", "")
-    ).rstrip(os.pathsep)
+sys.path.insert(0, HERE)
+
+import bench  # noqa: E402
+from datafusion_randgen_spark import add_udfs  # noqa: E402
 
 
 def _infer_round() -> int:
@@ -73,58 +72,18 @@ def main() -> None:
         sys.exit(2)
     tag = sys.argv[1]
     only = set(sys.argv[2:])
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     rnd = _infer_round()
     out_dir = os.path.join(HERE, "plans", f"r{rnd}")
     os.makedirs(out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dump_plans")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    import bench as bench_mod  # noqa: F401  (reuse its entry wiring)
-    from datafusion_randgen_spark import add_udfs, queries as cat
-
+    spark, sf_dir = bench.build_session("dump_plans")
     add_udfs(spark)
 
-    # the same headline set bench.py times (keep in sync by importing
-    # the catalog; gen probes are bench-internal and excluded here)
-    names = [
-        "flagship_randgen_graft",
-        "q1_pricing_summary", "q3_topk_revenue", "q5_regional_revenue",
-        "q_window_topk_per_group", "q8_market_share", "q_sessionization",
-        "q_asof_join", "d_exact_dedup", "d_minhash_lsh_pairs",
-        "d_connected_components", "d_embedding_near_dup",
-        "s_ann_bruteforce_topk", "s_ann_ivf_recall", "t_token_stats",
-        "p_training_data_prep", "q_pagerank_transitions",
-        "s_kmeans_embeddings", "d_contamination_check",
-        "q_exact_pctl_histogram", "q_sparse_matmul", "q_bfs_shortest_path",
-        "q_ewma_smoothing", "q_forward_fill_locf", "q_median_impute",
-        "d_simhash_r6", "t_dup_span_coverage", "q_rfm_segmentation",
-        "d_winnowing_fingerprints", "d_exact_substring_spans",
-        "d_semantic_dedup", "d_snapshot_dedup", "t_bpe_merge_vocab",
-        "d_skewed_digest_dedup",
+    names = [n for n in bench.ENTRIES if not only or n in only] + [
+        n for n in sorted(only) if n not in bench.ENTRIES
     ]
-    if only:
-        names = [n for n in names if n in only] + [
-            n for n in only if n not in names
-        ]
-
     for name in names:
-        fn = cat.flagship if name == "flagship_randgen_graft" else cat.QUERIES[name]
+        fn = bench.ENTRIES.get(name) or bench.cat.QUERIES[name]
         spark.sparkContext.setJobDescription(f"plan:{name}")
         try:
             df = fn(spark, sf_dir)

@@ -1,17 +1,20 @@
 #!/usr/bin/env python
-"""Per-entry job-count + wall profiling (optimization-round guide §1).
+"""Per-entry job-count + wall profiling.
 
-For each named bench entry: run it ``reps`` times under a job group and
+For each named entry: run it ``reps`` times under a job group and
 report median wall seconds AND the number of Spark jobs the entry
 launches (driver-loop overhead is invisible in a plan — job count is
 its direct measurement; e.g. an iterative operator at 3 jobs/round ×
 10 rounds = 30 scheduler round-trips per run).
 
 Usage:
-  python scripts/profile_jobs.py [--reps N] entry [entry ...]
+  python scripts/profile_jobs.py [--reps N] [entry ...]
 
-Prints one JSON line: {entry: {"median_sec": s, "jobs": n, "rows": r,
-"runs": [...]}}.  Same session config + warm-ups as bench.py.
+With no entries named, profiles every bench entry (``bench.ENTRIES``);
+any catalog entry name is accepted too.  Prints one JSON line:
+{entry: {"median_sec": s, "jobs": n, "rows": r, "runs": [...]}}.
+Session config and warm-ups are bench.py's own (``bench.build_session``,
+``bench.warm_up``).
 """
 
 from __future__ import annotations
@@ -22,13 +25,9 @@ import statistics
 import sys
 import time
 
-HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if HERE not in sys.path:
-    sys.path.insert(0, HERE)
-if HERE not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
-    os.environ["PYTHONPATH"] = (
-        HERE + os.pathsep + os.environ.get("PYTHONPATH", "")
-    ).rstrip(os.pathsep)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
 
 
 def main() -> None:
@@ -37,64 +36,22 @@ def main() -> None:
     if args and args[0] == "--reps":
         reps = int(args[1])
         args = args[2:]
-    if not args:
-        print("usage: profile_jobs.py [--reps N] entry ...", file=sys.stderr)
-        sys.exit(2)
+    names = args or list(bench.ENTRIES)
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile_jobs")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    from datafusion_randgen_spark import add_udfs, queries as cat
-    from datafusion_randgen_spark.sources import load_table
-
-    add_udfs(spark)
-    # same warm-ups as bench.py: JIT, Arrow, parquet footers, page cache
-    spark.range(0, 1_000_000, 1, int(cpus)).selectExpr("sum(id) AS s").collect()
-    load_table(spark, sf_dir, "lineitem").limit(1000).count()
-    for fname in sorted(os.listdir(sf_dir)):
-        p = os.path.join(sf_dir, fname)
-        if fname.endswith(".parquet"):
-            paths = (
-                [os.path.join(p, s) for s in sorted(os.listdir(p))]
-                if os.path.isdir(p)
-                else [p]
-            )
-            for fp in paths:
-                try:
-                    with open(fp, "rb") as fh:
-                        while fh.read(1 << 22):
-                            pass
-                except OSError:
-                    pass
+    spark, sf_dir = bench.build_session("profile_jobs")
+    bench.warm_up(spark, sf_dir)
 
     tracker = spark.sparkContext.statusTracker()
     out = {}
-    for name in args:
-        fn = cat.flagship if name == "flagship_randgen_graft" else cat.QUERIES[name]
+    for name in names:
+        fn = bench.ENTRIES.get(name) or bench.cat.QUERIES[name]
         runs, jobs_per_run, rows = [], [], None
         for i in range(reps):
             spark.catalog.clearCache()
             group = f"prof_{name}_{i}"
             spark.sparkContext.setJobGroup(group, name)
             t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            rows = df.count()
+            rows = fn(spark, sf_dir).count()
             runs.append(round(time.perf_counter() - t0, 3))
             spark.sparkContext.setJobGroup(None, None)
             jobs_per_run.append(len(tracker.getJobIdsForGroup(group)))
