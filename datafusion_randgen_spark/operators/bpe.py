@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, functions as F
 #: than trusting callers of the public :func:`bpe_encode` entry point.
 _SYMBOL_RE = re.compile(r"^[a-z0-9]+$")
 
-from datafusion_randgen_spark.operators import dedup
+from datafusion_randgen_spark.operators import _scoped_conf, dedup
 from datafusion_randgen_spark.pinning import (
     LOCAL_CHECKPOINT,
     get_pin_strategy,
@@ -124,39 +124,32 @@ def bpe_train(
     pattern — and (3) :func:`apply_merge`'s row-local fold.  The
     frame is pinned (:mod:`datafusion_randgen_spark.pinning`;
     ``localCheckpoint`` by default, ``persist`` for cluster
-    fault-tolerance) every ``checkpoint_every`` merges
-    (r9: was every merge) — enough to keep the chained fold
-    expressions from accumulating into one giant plan (the
-    connected-components discipline) without paying a vocabulary
-    materialization per round; the ≤``checkpoint_every``−1 pending
-    row-local folds the pair-count aggregate re-evaluates are far
-    cheaper than the skipped materializations.  Measured (r10,
-    same-session A/B under bench.py conditions, sf0.1, median of 5):
-    4.88s at ``checkpoint_every=1`` vs 4.02s at ``=4`` for the
-    20-merge entry — a real but modest ~1.2× win; the earlier
-    "3.8s → 2.9s" figure came from a different measurement context
-    and cross-VM-boot official bench rounds show it inside noise
-    (3.45s r8 → 3.50s r9).
+    fault-tolerance) every ``checkpoint_every`` merges — enough to
+    keep the chained fold expressions from accumulating into one giant
+    plan (the connected-components discipline) without paying a
+    vocabulary materialization per round; the ≤``checkpoint_every``−1
+    pending row-local folds the pair-count aggregate re-evaluates are
+    far cheaper than the skipped materializations (~1.2× faster than
+    pinning every merge on the sf0.1 20-merge entry).
 
     Determinism: pair counts are exact integers and ties break on
     (left, right) byte order, so the whole merge SEQUENCE is
     reproducible cross-engine — the DuckDB oracle replays the
     identical 20 steps and must land on the identical table.
 
-    Merge-loop job discipline (r21, guide §1.2/§5): the loop's frames
-    are bounded by the SYMBOL INVENTORY, not the corpus — merges only
-    concatenate, so after ``n_merges`` rounds the alphabet holds at
-    most 36 + n_merges symbols and the pair-count aggregate can never
-    produce more than (36 + n_merges)² groups (≈3.1k at 20 merges) AT
-    ANY CORPUS SCALE.  Three consequences, each measured on the sf0.1
-    entry (decomposition grid in OPTIMIZATION_r21.md):
+    Merge-loop job discipline: the loop's frames are bounded by the
+    SYMBOL INVENTORY, not the corpus — merges only concatenate, so
+    after ``n_merges`` rounds the alphabet holds at most 36 + n_merges
+    symbols and the pair-count aggregate can never produce more than
+    (36 + n_merges)² groups (≈3.1k at 20 merges) AT ANY CORPUS SCALE.
+    Three consequences, each measured on the sf0.1 entry:
 
-    * AQE is switched off for the loop body only (restored in a
-      ``finally``; the corpus-scale ``word_freq_table`` pass above the
-      loop keeps it on): runtime re-optimization of a ≤3.1k-group
-      shuffle buys nothing, and AQE charges one scheduler round trip
-      per materialized shuffle stage — one Spark job per merge round
-      instead of three.
+    * AQE is switched off for the loop body only (a scoped session
+      conf, restored on exit; the corpus-scale ``word_freq_table``
+      pass above the loop keeps it on): runtime re-optimization of a
+      ≤3.1k-group shuffle buys nothing, and AQE charges one scheduler
+      round trip per materialized shuffle stage — one Spark job per
+      merge round instead of three.
     * The loop runs ``_LOOP_SHUFFLE_PARTITIONS`` reduce partitions:
       map-side combine bounds every map task's output to the ≤3.1k
       pair groups, so more than a handful of reducers is pure task-
@@ -176,6 +169,9 @@ def bpe_train(
     materialization — see ``pinning.pin``)."""
     spark = docs.sparkSession
     words = pin(word_freq_table(docs, text_col))
+    # the pinned frame itself, not the coalesced view of it below: the
+    # first in-loop pin must release THIS frame
+    last_pin = words
     # one tiny job over the just-materialized pin: the row count that
     # sizes the loop's partitioning (data-derived, not core-derived)
     n_types = words.count()
@@ -183,18 +179,18 @@ def bpe_train(
     target = max(1, min(parts, n_types // _WORDS_PER_TASK + 1))
     if target < parts:
         words = words.coalesce(target)
-    last_pin = words
     lazy_pins = get_pin_strategy() == LOCAL_CHECKPOINT
     merges: list[tuple[int, str, str, str, int]] = []
-    conf = spark.conf
-    old_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    old_parts = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(_LOOP_SHUFFLE_PARTITIONS, int(old_parts or "200"))),
+    loop_parts = min(
+        _LOOP_SHUFFLE_PARTITIONS, int(spark.conf.get("spark.sql.shuffle.partitions"))
     )
-    try:
+    with _scoped_conf(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(loop_parts),
+        },
+    ):
         for rank in range(1, n_merges + 1):
             top = (
                 words.filter(F.size("syms") >= 2)
@@ -222,15 +218,12 @@ def bpe_train(
                 # rank == n_merges: nothing reads the pin in-loop, and
                 # callers consuming `words` re-pin as they see fit — an
                 # eager terminal pin would be one pure-overhead O(vocab)
-                # copy (the BFS terminal-fold rule, ADVICE r20)
+                # copy (the BFS terminal-fold rule)
                 if lazy_pins:
                     words = pin(words, eager=False)
                 else:
                     words = pin(words, replaces=last_pin)
                 last_pin = words
-    finally:
-        conf.set("spark.sql.adaptive.enabled", old_aqe)
-        conf.set("spark.sql.shuffle.partitions", old_parts)
     mdf = spark.createDataFrame(
         merges,
         "merge_rank long, left_sym string, right_sym string,"

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as WindowSpec, functions as F
 
 from datafusion_randgen_spark.functions.text import tokens, word_shingles
+from datafusion_randgen_spark.operators import _scoped_conf
 from datafusion_randgen_spark.pinning import pin, unpin
 
 
@@ -333,19 +334,13 @@ def _bound_from_buckets(buckets: DataFrame) -> int:
     two fixed tiny shuffles whose runtime re-planning buys nothing,
     and AQE charges one scheduler round trip per materialized shuffle
     stage (guide §1.2 — the probe is pure driver-loop floor)."""
-    spark = buckets.sparkSession
-    conf = spark.conf
-    old_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with _scoped_conf(buckets.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
         row = (
             buckets.groupBy("band", "bucket")
             .agg(F.count("*").alias("b"))
             .agg(F.sum(F.col("b") * (F.col("b") - F.lit(1)) / F.lit(2)).alias("bound"))
             .first()
         )
-    finally:
-        conf.set("spark.sql.adaptive.enabled", old_aqe)
     return int(row["bound"] or 0)
 
 
@@ -1309,53 +1304,23 @@ def semantic_dedup_exact(
     Returns ``(vec_id, cluster, rep_id, dot, is_dup)``.
     """
     from datafusion_randgen_spark.operators import clustering
-    from datafusion_randgen_spark.operators.clustering import (
-        kmeans_exact_quantized,
-    )
 
     tau_num, tau_den = tau_sq
-    _, cents = kmeans_exact_quantized(
+    _, cents = clustering.kmeans_exact_quantized(
         emb, k=k, iterations=iterations, id_col=id_col, vec_col=vec_col,
         scale=scale, shift=0,
     )
-    qv = emb.select(
-        F.col(id_col),
-        F.expr(
-            f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE)"
-            f" * {scale}) AS BIGINT))"
-        ).alias("qv"),
-    )
+    qv = emb.select(F.col(id_col), clustering.quantize(vec_col, scale).alias("qv"))
     # exact assignment against the FINAL centroids: argmin of int64
-    # squared-L2, first minimum (lowest cluster) on ties — row-local
-    # Catalyst folds over the k broadcast-literal centroid arrays
-    d2_exprs = [
-        "aggregate(zip_with(qv, array({}), (x, c) -> (x - c) * (x - c)),"
-        " 0L, (acc, v) -> acc + v)".format(
-            ", ".join(f"{int(v)}L" for v in cents[c])
-        )
-        for c in range(k)
-    ]
-    # Single-reference argmin (ADVICE r10, hardened r11): the obvious
-    # array_position(d2s, array_min(d2s)) references the distance
-    # array TWICE, and CollapseProject re-inlines the k folds into
-    # both references (verified on the optimized plan — a plan test
-    # pins the fold count now).  The struct-fold below references d2s
-    # exactly once, so however Catalyst collapses the projects, the k
-    # distance folds evaluate once per row.  Strict < keeps the FIRST
-    # minimum — identical tie semantics to array_position-of-min.
-
+    # squared-L2, first minimum (lowest cluster) on ties, each row's k
+    # distance folds evaluated once (see clustering.exact_nearest)
     asg = qv.select(
         F.col(id_col),
         "qv",
-        F.expr("array({})".format(", ".join(d2_exprs))).alias("d2s"),
+        clustering.exact_nearest("qv", cents).alias("cluster"),
         F.expr(
             "aggregate(transform(qv, x -> x * x), 0L, (acc, v) -> acc + v)"
         ).alias("n2"),
-    ).select(
-        F.col(id_col),
-        "qv",
-        F.expr(clustering.EXACT_ARGMIN_SQL).cast("int").alias("cluster"),
-        "n2",
     )
     reps = (
         asg.groupBy("cluster")

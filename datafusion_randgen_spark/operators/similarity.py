@@ -17,6 +17,8 @@ Two paths:
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -24,7 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datafusion_randgen_spark.functions.vectors import cosine_similarity  # noqa: F401 (API)
-from datafusion_randgen_spark.pinning import pin, unpin
+from datafusion_randgen_spark.operators import clustering
+from datafusion_randgen_spark.pinning import pin
 
 
 @F.pandas_udf(T.DoubleType())
@@ -323,93 +326,20 @@ def pq_train(
     ``(id, codes array<int>, recon_se double)`` frame against the
     final codebooks (recon_se = squared reconstruction error).
 
-    Scale design — the combiner pattern of ``clustering.kmeans``
-    VECTORIZED ACROSS SUBSPACES: all m codebooks train in the SAME
-    map-only Arrow pass per iteration (one corpus scan trains
-    everything), emitting O(partitions × m × k) partial rows; raw
-    vectors never shuffle; driver state is the m×k×(dim/m) tensor.
-    Deterministic: codebooks init from the k lowest-id vectors'
-    sub-vectors, fixed iteration count, argmin ties break low
+    Training is :func:`clustering.lloyd` over m subspaces — the same
+    loop as :func:`clustering.kmeans` (which is the m = 1 case): all m
+    codebooks train in the SAME map-only Arrow pass per iteration, one
+    groupBy + collect reduces the O(partitions × m × k) partial rows,
+    raw vectors never shuffle, and driver state is the m×k×(dim/m)
+    tensor.  Deterministic: codebooks init from the k lowest-id
+    vectors' sub-vectors, fixed iteration count, argmin ties break low
     (identical vectors ⇒ identical codes).  Empty clusters keep their
     centroid (the standard fix)."""
     spark = embeddings.sparkSession
-    dim_row = embeddings.select(F.size(vec_col)).first()
-    if dim_row is None:
-        raise ValueError("pq_train: input DataFrame is empty")
-    dim = dim_row[0]
-    if dim % m != 0:
-        raise ValueError(f"pq_train: dim {dim} not divisible by m={m}")
-    sd = dim // m
-    init = embeddings.orderBy(id_col).limit(k).select(vec_col).collect()
-    if len(init) < k:
-        raise ValueError(f"pq_train: k={k} exceeds the {len(init)} vectors")
-    V0 = np.array([r[0] for r in init], dtype=np.float64)  # (k, dim)
-    C = np.stack([V0[:, j * sd : (j + 1) * sd] for j in range(m)])  # (m,k,sd)
-
     vecs = embeddings.select(id_col, vec_col)
-    inertias: list[float] = []
-    prev_st = None
-    for _ in range(iterations):
-        bc = spark.sparkContext.broadcast(C)
-
-        def stats(batches):
-            CC = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-                rows = []
-                for j in range(CC.shape[0]):
-                    S = M[:, j * sd : (j + 1) * sd]
-                    Cj = CC[j]
-                    d2 = (
-                        (S * S).sum(axis=1)[:, None]
-                        - 2.0 * (S @ Cj.T)
-                        + (Cj * Cj).sum(axis=1)[None, :]
-                    )
-                    a = d2.argmin(axis=1)
-                    best = d2[np.arange(len(a)), a]
-                    for c in np.unique(a):
-                        mask = a == c
-                        rows.append(
-                            {
-                                "sub": int(j),
-                                "cluster": int(c),
-                                "cnt": int(mask.sum()),
-                                "inertia": float(np.maximum(best[mask], 0.0).sum()),
-                                "sums": S[mask].sum(axis=0).tolist(),
-                            }
-                        )
-                yield pd.DataFrame(rows)
-
-        st = pin(vecs.mapInPandas(
-            stats,
-            schema="sub int, cluster int, cnt long, inertia double, sums array<double>",
-        ), replaces=prev_st)  # partial frame feeds two reduces
-        prev_st = st
-        meta = st.groupBy("sub", "cluster").agg(
-            F.sum("cnt").alias("cnt"), F.sum("inertia").alias("i")
-        ).collect()
-        sums = (
-            st.select("sub", "cluster", F.posexplode("sums").alias("pos", "s"))
-            .groupBy("sub", "cluster", "pos")
-            .agg(F.sum("s").alias("s"))
-            .collect()
-        )
-        acc = np.zeros_like(C)
-        for r in sums:
-            acc[r["sub"], r["cluster"], r["pos"]] = r["s"]
-        new_c = C.copy()
-        total = 0.0
-        for r in meta:
-            total += r["i"]
-            if r["cnt"] > 0:
-                new_c[r["sub"], r["cluster"]] = acc[r["sub"], r["cluster"]] / r["cnt"]
-        inertias.append(total)
-        C = new_c
-        bc.destroy()
-    if prev_st is not None:
-        unpin(prev_st)  # last iteration's internal pin
+    C0 = clustering.init_codebooks(vecs, id_col, vec_col, m, k, np.float64, "pq_train")
+    C, history = clustering.lloyd(vecs, vec_col, C0, iterations)
+    inertias = [float(inertia) for _, _, inertia in history]
 
     fbc = spark.sparkContext.broadcast(C)
 
@@ -419,21 +349,13 @@ def pq_train(
             if pdf.empty:
                 continue
             M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            codes = np.zeros((len(M), CC.shape[0]), dtype=np.int32)
-            err = np.zeros(len(M))
-            for j in range(CC.shape[0]):
-                S = M[:, j * sd : (j + 1) * sd]
-                Cj = CC[j]
-                d2 = (
-                    (S * S).sum(axis=1)[:, None]
-                    - 2.0 * (S @ Cj.T)
-                    + (Cj * Cj).sum(axis=1)[None, :]
-                )
-                a = d2.argmin(axis=1)
-                codes[:, j] = a
-                err += np.maximum(d2[np.arange(len(a)), a], 0.0)
+            codes, d2 = clustering.nearest_codes(M, CC)
             yield pd.DataFrame(
-                {id_col: pdf[id_col], "codes": codes.tolist(), "recon_se": err}
+                {
+                    id_col: pdf[id_col],
+                    "codes": codes.astype(np.int32).tolist(),
+                    "recon_se": d2.sum(axis=1),
+                }
             )
 
     assignments = vecs.mapInPandas(
@@ -468,8 +390,6 @@ def ivfpq_train(
     projection (checkpointed — it feeds PQ training's iterations and
     the final join); PQ training is :func:`pq_train`'s single-pass-
     per-iteration form.  Driver state: (n_cells + m·k)·dim floats."""
-    from datafusion_randgen_spark.operators import clustering
-
     spark = embeddings.sparkSession
     coarse, _, _ = clustering.kmeans(
         embeddings, k=n_cells, iterations=iterations, id_col=id_col, vec_col=vec_col
@@ -506,6 +426,23 @@ def ivfpq_train(
     return coarse, pq_c, inertias, assignments
 
 
+def _adc_score():
+    """``Σ_j lut[j][codes[j]]`` — the ADC distance of one code row to
+    one query's per-subspace lookup table, as a pure-Catalyst
+    indexed-array fold (no Python)."""
+    return F.aggregate(
+        F.transform(
+            F.col("codes"),
+            lambda c, j: F.element_at(
+                F.element_at(F.col("lut"), (j + F.lit(1)).cast("int")),
+                (c + F.lit(1)).cast("int"),
+            ),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def ivfpq_adc_scores(
     codes_df: DataFrame,
     luts_df: DataFrame,
@@ -518,19 +455,8 @@ def ivfpq_adc_scores(
     IVF point: cost ∝ probed cells, not corpus).  The scoring fold is
     the same pure-Catalyst indexed-array expression as
     :func:`pq_adc_scores`."""
-    score = F.aggregate(
-        F.transform(
-            F.col("codes"),
-            lambda c, j: F.element_at(
-                F.element_at(F.col("lut"), (j + F.lit(1)).cast("int")),
-                (c + F.lit(1)).cast("int"),
-            ),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return codes_df.join(F.broadcast(luts_df), "cell").select(
-        "query_id", F.col(id_col).alias("neighbor_id"), score.alias("adc_d2")
+        "query_id", F.col(id_col).alias("neighbor_id"), _adc_score().alias("adc_d2")
     )
 
 
@@ -551,23 +477,12 @@ def pq_adc_scores(
     expression is a pure-Catalyst indexed-array fold — no Python, no
     shuffle until the top-k aggregation a caller adds.  Returns
     ``(query_id, neighbor_id, adc_d2)``."""
-    score = F.aggregate(
-        F.transform(
-            F.col("codes"),
-            lambda c, j: F.element_at(
-                F.element_at(F.col("lut"), (j + F.lit(1)).cast("int")),
-                (c + F.lit(1)).cast("int"),
-            ),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return (
         codes_df.crossJoin(F.broadcast(luts_df))
         .select(
             "query_id",
             F.col(id_col).alias("neighbor_id"),
-            score.alias("adc_d2"),
+            _adc_score().alias("adc_d2"),
         )
     )
 
@@ -670,82 +585,6 @@ def embedding_near_dup_pairs_exact(
     )
 
 
-def _pq_train_exact(
-    qv: DataFrame, C0: "np.ndarray", m: int, k: int, sd: int, iterations: int
-) -> "np.ndarray":
-    """The exact per-subspace Lloyd's loop shared by
-    :func:`pq_exact_quantized` (codebooks over quantized vectors) and
-    :func:`ivfpq_exact_quantized` (codebooks over quantized RESIDUALS):
-    ``qv`` is an (id, qv array<long>) frame; all m subspaces train in
-    the SAME Arrow pass per iteration (one scan trains everything);
-    first-min argmin ties, floor-division updates, empty clusters
-    carry — bit-replayable in SQL."""
-    from collections.abc import Iterator
-
-    spark = qv.sparkSession
-    C = C0
-    prev_partials = None
-    for _ in range(iterations):
-        bc = spark.sparkContext.broadcast(C)
-
-        def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            CC = bc.value  # (m, k, sd) int64
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                M = np.vstack(pdf["qv"].to_numpy()).astype(np.int64)
-                rows = []
-                for j in range(CC.shape[0]):
-                    S = M[:, j * sd:(j + 1) * sd]
-                    Cj = CC[j]
-                    d2 = (
-                        (S * S).sum(axis=1)[:, None]
-                        - 2 * (S @ Cj.T)
-                        + (Cj * Cj).sum(axis=1)[None, :]
-                    )
-                    a = d2.argmin(axis=1)  # first min = lowest code
-                    for c in np.unique(a):
-                        mask = a == c
-                        rows.append(
-                            {
-                                "sub": int(j),
-                                "cluster": int(c),
-                                "cnt": int(mask.sum()),
-                                "sums": S[mask].sum(axis=0).tolist(),
-                            }
-                        )
-                yield pd.DataFrame(rows)
-
-        partials = qv.select("qv").mapInPandas(
-            stats, schema="sub int, cluster int, cnt long, sums array<long>"
-        )
-        partials = pin(partials, replaces=prev_partials)
-        prev_partials = partials
-        cnts = {
-            (r["sub"], r["cluster"]): int(r["cnt"])
-            for r in partials.groupBy("sub", "cluster")
-            .agg(F.sum("cnt").alias("cnt"))
-            .collect()
-        }
-        acc = np.zeros((m, k, sd), dtype=np.int64)
-        for r in (
-            partials.select("sub", "cluster", F.posexplode("sums").alias("pos", "s"))
-            .groupBy("sub", "cluster", "pos")
-            .agg(F.sum("s").alias("s"))
-            .collect()
-        ):
-            acc[r["sub"], r["cluster"], r["pos"]] = r["s"]
-        newC = C.copy()
-        for (j, c), n in cnts.items():
-            if n > 0:
-                newC[j, c] = acc[j, c] // n  # floor division, exact
-        C = newC
-        bc.destroy()
-    if prev_partials is not None:
-        unpin(prev_partials)  # last iteration's internal pin
-    return C
-
-
 def pq_exact_quantized(
     embeddings: DataFrame,
     m: int = 4,
@@ -759,14 +598,14 @@ def pq_exact_quantized(
     oracle twin of :func:`pq_train` (whose float codebooks carry
     partition-order FP jitter and can only be invariant-checked).
 
-    Vectors floor-quantize to int64 (scale ``scale``, no shift: only
-    L2 distances are taken, which are shift-invariant anyway, and
-    centroid updates floor-divide on both engines).  Each of the ``m``
-    subspaces learns an independent k-means codebook by the exact
-    integer Lloyd's recipe of ``clustering.kmeans_exact_quantized``
-    (first-min argmin ties, floor-division updates, empty clusters
-    carry), ALL m SUBSPACES IN THE SAME Arrow pass per iteration — one
-    corpus scan trains everything, the :func:`pq_train` scale shape.
+    Vectors floor-quantize to int64 (:func:`clustering.quantize`,
+    scale ``scale``, no shift: only L2 distances are taken, which are
+    shift-invariant anyway, and centroid updates floor-divide on both
+    engines).  The m codebooks train by :func:`clustering.lloyd` on
+    int64 codebooks — the exact recipe of
+    ``clustering.kmeans_exact_quantized`` (first-min argmin ties,
+    floor-division updates, empty clusters carry), all m subspaces in
+    the same Arrow pass and the same single reduce per iteration.
     Each vector is then encoded (per-subspace exact argmin against the
     final codebooks) and scored by exact ADC against the corpus's
     lowest-id vector as the query: ``adc_d2 = Σ_j d2(query_sub_j,
@@ -780,40 +619,22 @@ def pq_exact_quantized(
     pin the 8-byte frame once (``localCheckpoint``) and feed both from
     it.
     """
-    from collections.abc import Iterator
-
     spark = embeddings.sparkSession
-    dim_row = embeddings.select(F.size(vec_col)).first()
-    if dim_row is None:
-        raise ValueError("pq_exact_quantized: input DataFrame is empty")
-    dim = dim_row[0]
-    if dim % m != 0:
-        raise ValueError(f"pq_exact_quantized: dim {dim} not divisible by m={m}")
-    sd = dim // m
     qv = embeddings.select(
-        F.col(id_col),
-        F.expr(
-            f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE)"
-            f" * {scale}) AS BIGINT))"
-        ).alias("qv"),
+        F.col(id_col), clustering.quantize(vec_col, scale).alias("qv")
     )
-    init = qv.orderBy(id_col).limit(k).select("qv").collect()
-    if len(init) < k:
-        raise ValueError(f"pq_exact_quantized: k={k} exceeds input size")
-    V0 = np.array([r[0] for r in init], dtype=np.int64)  # (k, dim)
-    C = np.stack([V0[:, j * sd:(j + 1) * sd] for j in range(m)])  # (m,k,sd)
-    C = _pq_train_exact(qv, C, m, k, sd, iterations)
+    C0 = clustering.init_codebooks(
+        qv, id_col, "qv", m, k, np.int64, "pq_exact_quantized"
+    )
+    C, _ = clustering.lloyd(qv, "qv", C0, iterations)
 
     # exact encode + ADC against the lowest-id vector as query
-    qrow = qv.orderBy(id_col).limit(1).select("qv").collect()[0][0]
-    Q = np.array(qrow, dtype=np.int64)
-    # per-subspace table of query-to-centroid exact distances
-    qd = np.stack(
-        [
-            ((Q[j * sd:(j + 1) * sd][None, :] - C[j]) ** 2).sum(axis=1)
-            for j in range(m)
-        ]
-    )  # (m, k)
+    Q = np.array(
+        qv.orderBy(id_col).limit(1).select("qv").collect()[0][0],
+        dtype=np.int64,
+    )
+    # per-subspace table of query-to-centroid exact distances, (m, k)
+    qd = ((Q.reshape(m, 1, -1) - C) ** 2).sum(axis=2)
     final_bc = spark.sparkContext.broadcast((C, qd))
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -822,20 +643,11 @@ def pq_exact_quantized(
             if pdf.empty:
                 continue
             M = np.vstack(pdf["qv"].to_numpy()).astype(np.int64)
+            codes, _ = clustering.nearest_codes(M, CC)
             out = {id_col: pdf[id_col].to_numpy()}
-            adc = np.zeros(len(M), dtype=np.int64)
-            for j in range(CC.shape[0]):
-                S = M[:, j * sd:(j + 1) * sd]
-                Cj = CC[j]
-                d2 = (
-                    (S * S).sum(axis=1)[:, None]
-                    - 2 * (S @ Cj.T)
-                    + (Cj * Cj).sum(axis=1)[None, :]
-                )
-                code = d2.argmin(axis=1)
-                out[f"code{j}"] = code.astype("int32")
-                adc += QD[j][code]
-            out["adc_d2"] = adc
+            for j in range(m):
+                out[f"code{j}"] = codes[:, j].astype("int32")
+            out["adc_d2"] = QD[np.arange(m), codes].sum(axis=1)
             yield pd.DataFrame(out)
 
     schema = (
@@ -864,13 +676,14 @@ def ivfpq_exact_quantized(
 
     Pipeline, all int64: floor-quantize (no shift — residuals need
     true signs); coarse cells from the exact integer Lloyd's
-    (``clustering.kmeans_exact_quantized``); per-vector RESIDUAL
-    ``r = q − coarse[cell]`` computed row-locally by Catalyst folds
-    (vectors never shuffle); per-subspace residual codebooks from the
-    shared exact PQ trainer (:func:`_pq_train_exact` — all m subspaces
-    in one Arrow pass per iteration); exact encode; exact IVF-ADC
-    against the corpus's lowest-id vector as query — for a vector v in
-    cell c the score is ``Σ_j d2((query − coarse[c])_sub_j,
+    (``clustering.kmeans_exact_quantized``); per-vector cell
+    (:func:`clustering.exact_nearest`) and RESIDUAL ``r = q −
+    coarse[cell]`` computed row-locally by Catalyst folds (vectors
+    never shuffle); per-subspace residual codebooks from
+    :func:`clustering.lloyd` on int64 codebooks (all m subspaces in
+    one Arrow pass per iteration); exact encode; exact IVF-ADC against
+    the corpus's lowest-id vector as query — for a vector v in cell c
+    the score is ``Σ_j d2((query − coarse[c])_sub_j,
     codebook_j[code_j(v)])``, i.e. one exact per-cell LUT, the true
     IVF-PQ identity.  Bounds: |q| ≤ ~300 at scale 500 ⇒ |residual| ≤
     ~600 ⇒ subspace d2 ≤ ~2.4e7, ADC ≤ ~1e8 — far inside int64.
@@ -881,89 +694,38 @@ def ivfpq_exact_quantized(
     per phase (coarse training, residual training, encode); a
     production deployment pins each 8-byte projection once.
     """
-    from collections.abc import Iterator
-
-    from datafusion_randgen_spark.operators import clustering
-    from datafusion_randgen_spark.operators.clustering import (
-        kmeans_exact_quantized,
-    )
-
     spark = embeddings.sparkSession
-    dim_row = embeddings.select(F.size(vec_col)).first()
-    if dim_row is None:
-        raise ValueError("ivfpq_exact_quantized: input DataFrame is empty")
-    dim = dim_row[0]
-    if dim % m != 0:
-        raise ValueError(f"ivfpq_exact_quantized: dim {dim} % m={m} != 0")
-    sd = dim // m
-    _, CC = kmeans_exact_quantized(
+    _, CC = clustering.kmeans_exact_quantized(
         embeddings, k=n_cells, iterations=coarse_iterations,
         id_col=id_col, vec_col=vec_col, scale=scale, shift=0,
     )  # (n_cells, dim) int64
     qv = embeddings.select(
-        F.col(id_col),
-        F.expr(
-            f"transform({vec_col}, x -> CAST(floor(CAST(x AS DOUBLE)"
-            f" * {scale}) AS BIGINT))"
-        ).alias("qv"),
+        F.col(id_col), clustering.quantize(vec_col, scale).alias("qv")
     )
-    # row-local exact cell assignment + residual (Catalyst folds over
-    # broadcast-literal coarse centroids — no shuffle, no Python)
-    d2_exprs = [
-        "aggregate(zip_with(qv, array({}), (x, c) -> (x - c) * (x - c)),"
-        " 0L, (acc, v) -> acc + v)".format(
-            ", ".join(f"{int(v)}L" for v in CC[c])
-        )
-        for c in range(n_cells)
-    ]
-    cents_lit = "array({})".format(
-        ", ".join(
-            "array({})".format(", ".join(f"{int(v)}L" for v in CC[c]))
-            for c in range(n_cells)
-        )
-    )
-    # Single-reference argmin (the semantic_dedup_exact pattern — see
-    # the comment there: array_position + array_min double-reference
-    # the distance array and CollapseProject re-inlines the folds into
-    # both; the struct-fold references it once, first-min ties kept by
-    # strict <), then the residual indexes the centroid literal by the
-    # cell column instead of re-deriving the argmin.
-
+    # the residual indexes the centroid literal by the cell column
+    # instead of re-deriving the argmin
     rqv = qv.select(
-        F.col(id_col),
-        F.expr("array({})".format(", ".join(d2_exprs))).alias("d2s"),
-        "qv",
-    ).select(
-        F.col(id_col),
-        F.expr(clustering.EXACT_ARGMIN_SQL).cast("int").alias("cell"),
-        "qv",
+        F.col(id_col), clustering.exact_nearest("qv", CC).alias("cell"), "qv"
     ).select(
         F.col(id_col),
         "cell",
         F.expr(
-            f"zip_with(qv, element_at({cents_lit}, cell + 1),"
-            " (x, c) -> x - c)"
-        ).alias("qv"),  # residual, named qv for the shared trainer
+            f"zip_with(qv, element_at({clustering.sql_bigint_array(CC)},"
+            " cell + 1), (x, c) -> x - c)"
+        ).alias("qv"),  # residual
     )
-    init = rqv.orderBy(id_col).limit(k).select("qv").collect()
-    if len(init) < k:
-        raise ValueError(f"ivfpq_exact_quantized: k={k} exceeds input size")
-    V0 = np.array([r[0] for r in init], dtype=np.int64)
-    C0 = np.stack([V0[:, j * sd:(j + 1) * sd] for j in range(m)])
-    C = _pq_train_exact(rqv, C0, m, k, sd, pq_iterations)
+    C0 = clustering.init_codebooks(
+        rqv, id_col, "qv", m, k, np.int64, "ivfpq_exact_quantized"
+    )
+    C, _ = clustering.lloyd(rqv, "qv", C0, pq_iterations)
 
-    # exact per-cell query LUT: query residual in cell c vs codebook j
+    # exact per-cell query LUT: query residual in cell c vs codebook j,
+    # (n_cells, m, k)
     Q = np.array(
         qv.orderBy(id_col).limit(1).select("qv").collect()[0][0],
         dtype=np.int64,
     )
-    qd = np.zeros((n_cells, m, k), dtype=np.int64)
-    for c in range(n_cells):
-        qr = Q - CC[c]
-        for j in range(m):
-            qd[c, j] = (
-                (qr[j * sd:(j + 1) * sd][None, :] - C[j]) ** 2
-            ).sum(axis=1)
+    qd = (((Q - CC).reshape(n_cells, m, 1, -1) - C[None]) ** 2).sum(axis=3)
     final_bc = spark.sparkContext.broadcast((C, qd))
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -973,23 +735,14 @@ def ivfpq_exact_quantized(
                 continue
             M = np.vstack(pdf["qv"].to_numpy()).astype(np.int64)
             cells = pdf["cell"].to_numpy().astype(np.int64)
+            codes, _ = clustering.nearest_codes(M, Cb)
             out = {
                 id_col: pdf[id_col].to_numpy(),
                 "cell": cells.astype("int32"),
             }
-            adc = np.zeros(len(M), dtype=np.int64)
-            for j in range(Cb.shape[0]):
-                S = M[:, j * sd:(j + 1) * sd]
-                Cj = Cb[j]
-                d2 = (
-                    (S * S).sum(axis=1)[:, None]
-                    - 2 * (S @ Cj.T)
-                    + (Cj * Cj).sum(axis=1)[None, :]
-                )
-                code = d2.argmin(axis=1)
-                out[f"code{j}"] = code.astype("int32")
-                adc += QD[cells, j, code]
-            out["adc_d2"] = adc
+            for j in range(m):
+                out[f"code{j}"] = codes[:, j].astype("int32")
+            out["adc_d2"] = QD[cells[:, None], np.arange(m), codes].sum(axis=1)
             yield pd.DataFrame(out)
 
     schema = (

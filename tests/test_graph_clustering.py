@@ -182,3 +182,61 @@ def test_argmin_d2_chunked_matches_full():
     C2 = np.vstack([C[7], C[7]])
     a2, _ = clustering.argmin_d2(M, C2, chunk=1)
     assert (a2 == 0).all()
+    # int64 inputs stay int64 and exact on both paths
+    Mi = rng.integers(-300, 300, size=(200, 16))
+    Ci = rng.integers(-300, 300, size=(300, 16))
+    want = ((Mi[:, None, :] - Ci[None]) ** 2).sum(axis=2)
+    for chunk in (10_000, 64):
+        a_i, d_i = clustering.argmin_d2(Mi, Ci, chunk=chunk)
+        assert d_i.dtype == np.int64
+        assert (a_i == want.argmin(axis=1)).all()
+        assert (d_i == want.min(axis=1)).all()
+
+
+def test_lloyd_jobs_per_iteration_and_pq_m1_is_kmeans(spark):
+    """k-means, float PQ and exact PQ train through one Lloyd's loop,
+    so each extra iteration costs the same two Spark jobs (one
+    partial-stats map stage, one reduce + collect), whatever the
+    number of subspaces.  And PQ with one subspace IS k-means: same
+    centroids, same codes (integer-valued inputs keep every centroid
+    sum exact, so partial arrival order cannot move a bit)."""
+    import uuid
+
+    from datafusion_randgen_spark.operators import similarity
+
+    pts = [
+        [(i * 7 + j * 3) % 11 + 10 * (i % 3) for j in range(8)] for i in range(60)
+    ]
+    df = _vec_df(spark, pts)
+    sc = spark.sparkContext
+
+    def jobs(train) -> int:
+        group = f"lloyd-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count Lloyd's jobs")
+        try:
+            train()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    trainers = {
+        "kmeans": lambda it: clustering.kmeans(df, k=3, iterations=it),
+        "pq_train": lambda it: similarity.pq_train(df, m=4, k=3, iterations=it),
+        "pq_exact_quantized": lambda it: similarity.pq_exact_quantized(
+            df, m=4, k=3, iterations=it
+        ),
+    }
+    per_iter = {
+        name: jobs(lambda: train(3)) - jobs(lambda: train(2))
+        for name, train in trainers.items()
+    }
+    assert per_iter == {name: 2 for name in trainers}, per_iter
+
+    centroids, _, km_asg = clustering.kmeans(df, k=3, iterations=3)
+    C, _, pq_asg = similarity.pq_train(df, m=1, k=3, iterations=3)
+    assert C.shape == (1, 3, 8)
+    assert np.array_equal(C[0], centroids)
+    km = {r.vec_id: r.cluster for r in km_asg.collect()}
+    pq = {r.vec_id: r.codes[0] for r in pq_asg.collect()}
+    assert pq == km
+    assert len(set(km.values())) == 3

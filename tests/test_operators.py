@@ -960,6 +960,16 @@ def test_bpe_train_restores_session_conf(spark):
         conf.get("spark.sql.adaptive.enabled"),
         conf.get("spark.sql.shuffle.partitions"),
     ) == before
+    # a key that was unset before training is unset again afterwards,
+    # not pinned to the value training read
+    key = "spark.sql.adaptive.enabled"
+    conf.unset(key)
+    try:
+        assert conf.get(key, None) is None
+        bpe.bpe_train(docs, n_merges=3)
+        assert conf.get(key, None) is None
+    finally:
+        conf.set(key, before[0])
 
 
 def test_bpe_apply_merge_rejects_non_alphabet_symbols(spark):
@@ -1172,8 +1182,8 @@ def test_iterative_pins_mode_invariant(spark):
                 [tuple(r) for r in merges.orderBy("merge_rank").collect()],
                 {tuple(r) for r in dedup.connected_components(edges).collect()},
                 {(r.node, r.dist) for r in graph.bfs_distances(bfs_edges, 0).collect()},
-                # exercises the r11 pins inside kmeans training stats
-                # and SemDeDup's tagged frame too
+                # exercises SemDeDup's tagged-frame pin too (its
+                # k-means training pins nothing)
                 {tuple(r) for r in dedup.semantic_dedup(
                     emb, threshold=0.99, k=4, iterations=2
                 ).collect()},
@@ -1185,8 +1195,8 @@ def test_iterative_pins_mode_invariant(spark):
     # leftover persisted frames must be bounded by the RETURNED-frame
     # pins (per-iteration internal pins release via replaces/unpin):
     # bpe words final, CC final labels + lazy probe pin, BFS last
-    # frontier+visited, SemDeDup tagged + kmeans last-stats — a leak
-    # of one frame PER ITERATION would blow well past this bound
+    # frontier+visited, SemDeDup tagged — a leak of one frame PER
+    # ITERATION would blow well past this bound
     # (delta, not absolute: localCheckpointed RDDs from earlier tests
     # in the shared session also register as persistent)
     assert persist_delta <= 10, persist_delta
@@ -1207,6 +1217,44 @@ def test_pin_lazy_replaces_raises(spark, pin_mode):
     with pin_strategy(pin_mode):
         with pytest.raises(ValueError, match="eager=False"):
             pin(a, eager=False, replaces=b)
+
+
+def test_bpe_initial_pin_released_under_persist(spark):
+    """Under persist, bpe_train must leave exactly ONE pinned frame —
+    the last in-loop pin the returned words derive from.  The word
+    table here spans more partitions than its few types need, so
+    training coalesces it; the first in-loop pin must still release
+    the persisted word table itself, not the coalesced view of it."""
+    from datafusion_randgen_spark.operators import bpe
+    from datafusion_randgen_spark.pinning import pin_strategy
+
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(
+            ["low lower lowest", "new newer newest", "wide wider widest"] * 3
+        )],
+        "doc_id long, text string",
+    )
+
+    def _persisted_ids():
+        # id SET, not a count (see the BFS test below)
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    conf = spark.conf
+    key = "spark.sql.adaptive.enabled"
+    old = conf.get(key)
+    before = _persisted_ids()
+    try:
+        # AQE off: the word table keeps the shuffle's partition count,
+        # so training must coalesce it to one
+        conf.set(key, "false")
+        assert bpe.word_freq_table(docs).rdd.getNumPartitions() > 1
+        with pin_strategy("persist"):
+            bpe.bpe_train(docs, n_merges=5, checkpoint_every=2)
+            assert len(_persisted_ids() - before) == 1
+    finally:
+        conf.set(key, old)
+        spark.catalog.clearCache()
 
 
 @pytest.mark.parametrize("max_hops", [20, 2])

@@ -677,9 +677,10 @@ def test_exact_replay_scan_budgets(spark):
     times (init take-ordered, 2 training iterations, query
     take-ordered, encode), ivfpq_exact_quantized 8 (coarse init + 2
     coarse iterations, residual init, 2 residual iterations, query,
-    encode), each plus one <=1-partition dim probe.  Measured with a
-    row-counting pass-through source so a refactor that silently adds
-    even ONE more full pass breaks the upper bound."""
+    encode).  The upper bound allows one more <=1-partition read.
+    Measured with a row-counting pass-through source so a refactor
+    that silently adds even ONE more full pass breaks the upper
+    bound."""
     from datafusion_randgen_spark.operators import similarity
 
     n, dim, parts = 64, 8, 4
@@ -701,7 +702,7 @@ def test_exact_replay_scan_budgets(spark):
     src = base.mapInPandas(
         counting, schema="vec_id long, embedding array<float>"
     )
-    probe_slack = n // parts + parts  # the dim probe reads <=1 partition
+    probe_slack = n // parts + parts  # one <=1-partition read
 
     start = acc.value
     out = similarity.pq_exact_quantized(src, m=2, k=2, iterations=2)
